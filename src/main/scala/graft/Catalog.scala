@@ -161,13 +161,6 @@ object Catalog {
       }
     }
 
-  /** ANALYZE-style persisted statistics for an engine-written table
-    * (SURVEY.md §4; computed by [[graft.lifecycle.Stats.analyze]], refreshed
-    * by `Lifecycle.compact` — the VACUUM ANALYZE path). None until analyzed.
-    */
-  def tableStats(spark: SparkSession, tablePath: String): Option[DataFrame] =
-    graft.lifecycle.Stats.read(spark, tablePath)
-
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
   def customer(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "customer")
@@ -267,10 +260,6 @@ object Catalog {
     df.withColumn("dt", to_date(col(tsCol)))
       .repartition(col("dt")) // one shuffle → one writer wave per day
       .write.partitionBy("dt").mode("overwrite").parquet(path)
-
-  /** Read a date-partitioned table; `dt` filters prune partitions. */
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Read a parquet table whose FILES carry evolved schemas — the
     * long-lived-table reality at 100 TB: years of daily writes accrete

@@ -150,14 +150,6 @@ object Dashboard {
       .orderBy(col("table_name"), col("det_col"), col("dep_col"))
   }
 
-  /** The schema-health page's KEY CATALOG companion: c19's minimal
-    * unique-column-combination relation, artifact-served (the same
-    * reads-not-recomputes contract as [[schemaHealth]] — the lattice's
-    * base-table jobs ran once at artifact build).
-    */
-  def keyCatalog(spark: SparkSession, dir: String): DataFrame =
-    operators.Profile.keyDiscovery(spark, dir)
-
   /** Alert/threshold flags (reference myapp/views.py:622-637 vs the
     * template constants — inconsistent layers, so thresholds are config;
     * SURVEY.md §6). Appends boolean status columns to a metric row set.

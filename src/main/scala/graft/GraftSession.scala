@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One session builder for the operational mains (Smoke/Verify/Bench/
-  * Explain/DashboardBench): honors SPARK_GRAFT_CPUS, pins UTC, sizes
+  * DashboardBench and the dev mains Explain/Prof): honors SPARK_GRAFT_CPUS, pins UTC, sizes
   * shuffle partitions to the core count, and registers the full graft
   * surface — SQL functions AND the optimizer rule — so every main runs
   * (and Explain DISPLAYS) exactly the plans the shipped extensions

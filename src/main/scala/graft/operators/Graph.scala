@@ -85,17 +85,21 @@ object Graph {
   def pageRankOf(nodes: () => DataFrame, edges: () => DataFrame,
       iters: Int): DataFrame = {
     var ranks = nodes().select(col("doc_id"), lit(UnitMicro).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = ranks.withColumnRenamed("doc_id", "src")
-        .join(edges(), Seq("src"))
-        .select(col("dst").as("doc_id"), expr("r div deg").as("c"))
-        .groupBy(col("doc_id")).agg(sum(col("c")).as("c"))
-      ranks = nodes().join(contrib, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          expr(s"${BaseMicro}L + (${DampMicro}L * coalesce(c, 0L))" +
-            s" div ${UnitMicro}L").as("r"))
-    }
+    for (_ <- 1 to iters) ranks = superstep(ranks, nodes, edges)
     ranks.select(col("doc_id"), col("r").as("rank_micro"))
+  }
+
+  // one damped update: each node's next r is `base` plus the damped sum
+  // of its in-edges' r div deg (k1, its convergence form, and k7)
+  private def superstep(ranks: DataFrame, nodes: () => DataFrame,
+      edges: () => DataFrame, base: String = s"${BaseMicro}L"): DataFrame = {
+    val contrib = ranks.withColumnRenamed("doc_id", "src")
+      .join(edges(), Seq("src"))
+      .select(col("dst").as("doc_id"), expr("r div deg").as("c"))
+      .groupBy(col("doc_id")).agg(sum(col("c")).as("c"))
+    nodes().join(contrib, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        expr(s"$base + (${DampMicro}L * coalesce(c, 0L)) div ${UnitMicro}L").as("r"))
   }
 
   /** Convergence-stop deployment form (round-11 verdict item #6): the
@@ -127,15 +131,7 @@ object Graph {
     var it = 0
     var converged = false
     while (it < maxIters && !converged) {
-      val contrib = ranks.withColumnRenamed("doc_id", "src")
-        .join(edges(), Seq("src"))
-        .select(col("dst").as("doc_id"), expr("r div deg").as("c"))
-        .groupBy(col("doc_id")).agg(sum(col("c")).as("c"))
-      val next = nodes().join(contrib, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          expr(s"${BaseMicro}L + (${DampMicro}L * coalesce(c, 0L))" +
-            s" div ${UnitMicro}L").as("r"))
-        .localCheckpoint(true)
+      val next = superstep(ranks, nodes, edges).localCheckpoint(true)
       val delta = next
         .join(ranks.select(col("doc_id"), col("r").as("rp")), Seq("doc_id"))
         .agg(coalesce(sum(abs(col("r") - col("rp"))), lit(0L)))
@@ -892,16 +888,8 @@ object Graph {
       .localCheckpoint(true)
     var ranks = seeded.select(col("doc_id"),
       (col("s") * UnitMicro).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = ranks.withColumnRenamed("doc_id", "src")
-        .join(edges(), Seq("src"))
-        .select(col("dst").as("doc_id"), expr("r div deg").as("c"))
-        .groupBy(col("doc_id")).agg(sum(col("c")).as("c"))
-      ranks = seeded.join(contrib, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          expr(s"s * ${BaseMicro}L + (${DampMicro}L * coalesce(c, 0L))" +
-            s" div ${UnitMicro}L").as("r"))
-    }
+    for (_ <- 1 to iters)
+      ranks = superstep(ranks, () => seeded, edges, s"s * ${BaseMicro}L")
     ranks.select(col("doc_id"), col("r").as("trust_micro"))
   }
 

@@ -573,15 +573,6 @@ object Multimodal {
       .filter(col("n_copies") > 1)
       .orderBy(col("keeper_doc_id"))
 
-  val mediaDedupSql: String =
-    s"""WITH fp AS (
-      | SELECT doc_id, ${TextOps.hash60Sql("hex(encode(text))")} AS payload_fp
-      | FROM documents
-      | WHERE text IS NOT NULL AND octet_length(encode(text)) > 0)
-      |SELECT payload_fp, count(*) AS n_copies, min(doc_id) AS keeper_doc_id
-      |FROM fp GROUP BY payload_fp HAVING count(*) > 1
-      |ORDER BY keeper_doc_id""".stripMargin.replace('\n', ' ')
-
   // ---------------------------------------------------------------------
   // m5 gate de-vacuization (round-11 verdict item #2): the sf fixtures
   // carry no byte-identical post-header payloads, so the pure-fixture m5
@@ -831,11 +822,6 @@ object Multimodal {
     * normalized mass) for a pair to count as near-duplicate.
     */
   val NeardupL1Micro = 20000L
-
-  /** Quantization cell width for the pigeonhole bands = T / #bands, the
-    * largest width for which "some band ≤ T/#bands" forces ±1 cells.
-    */
-  val NeardupBandWidth: Long = NeardupL1Micro / (FeatureBins / 2)
 
   /** A second, 2.5× looser threshold registered as its own gate entry
     * (round-10 verdict item #4): the pigeonhole construction's

@@ -318,12 +318,11 @@ object Profile {
   def chiSquare(spark: SparkSession, dir: String): DataFrame =
     chiSquareOf(graft.Catalog.documents(spark, dir), "lang", "source")
 
-  val chiSquareSql: String =
-    """WITH cells AS (
-      | SELECT lang AS x, source AS y, count(*)::BIGINT AS o
-      | FROM documents
-      | WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-      |xs AS (SELECT x, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY x),
+  /** The chi-square oracle over a `cells` (x, y, o) CTE, c4's and n13's.
+    * Left unmargined: the caller's stripMargin covers the inlined lines.
+    */
+  private[operators] def chiSquareTailSql: String =
+    """xs AS (SELECT x, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY x),
       |ys AS (SELECT y, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY y),
       |tot AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM cells),
       |grid AS (
@@ -337,7 +336,14 @@ object Profile {
       | CAST((count(DISTINCT x) - 1) * (count(DISTINCT y) - 1) AS BIGINT) AS dof,
       | CAST(sum(CAST(round(CAST(dev AS DOUBLE) * CAST(dev AS DOUBLE) * 1000000.0
       |  / (CAST(n AS DOUBLE) * CAST(r AS DOUBLE) * CAST(c AS DOUBLE)), 0) AS BIGINT)) AS BIGINT) AS chi2_ppm
-      |FROM u""".stripMargin.replace('\n', ' ')
+      |FROM u"""
+
+  val chiSquareSql: String =
+    s"""WITH cells AS (
+      | SELECT lang AS x, source AS y, count(*)::BIGINT AS o
+      | FROM documents
+      | WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
+      |$chiSquareTailSql""".stripMargin.replace('\n', ' ')
 
   // ---------------------------------------------------------------------
   // C5 — referential-integrity audit between two tables sharing an id

@@ -464,11 +464,14 @@ object Search {
         meta.select(col("tok"), col("ub")), TopK), TopK)
   }
 
-  val bm25TopKSql: String = {
-    val terms = QueryTerms.map(t => s"'$t'").mkString(", ")
-    s"""WITH dl AS (
+  /** The lexical oracles' shared CTEs: BM25 over `src` (doc_id, text)
+    * for the quoted `terms`, ending in `scored` (doc_id, ppm per term).
+    * Left unmargined: the caller's stripMargin covers the inlined lines.
+    */
+  private def bm25ScoredCtes(src: String, terms: String): String =
+    s"""dl AS (
        | SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
-       | FROM documents),
+       | FROM $src),
        |dl2 AS (SELECT doc_id, len(toks)::BIGINT AS dl, toks FROM dl),
        |stats AS (SELECT count(*)::BIGINT AS n, CAST(sum(dl) AS BIGINT) AS t
        | FROM dl2),
@@ -481,11 +484,19 @@ object Search {
        | SELECT tf.doc_id,
        |  CAST(round(CAST((length(bin((2*n + 2) // (2*df + 1))) - 1) * 22 * tf * t AS DOUBLE)
        |   / CAST(10*tf*t + 3*t + 9*dl*n AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS ppm
-       | FROM tf JOIN dfreq USING (tok), stats)
+       | FROM tf JOIN dfreq USING (tok), stats)"""
+
+  /** [[bm25ScoredCtes]] plus the top-[[TopK]] documents by summed ppm. */
+  private def bm25TopKOver(src: String, terms: String): String =
+    s"""${bm25ScoredCtes(src, terms)}
        |SELECT doc_id, count(*)::BIGINT AS n_terms_matched,
        | CAST(sum(ppm) AS BIGINT) AS score_ppm
        |FROM scored GROUP BY doc_id
-       |ORDER BY score_ppm DESC, doc_id LIMIT $TopK""".stripMargin.replace('\n', ' ')
+       |ORDER BY score_ppm DESC, doc_id LIMIT $TopK"""
+
+  val bm25TopKSql: String = {
+    val terms = QueryTerms.map(t => s"'$t'").mkString(", ")
+    s"""WITH ${bm25TopKOver("documents", terms)}""".stripMargin.replace('\n', ' ')
   }
 
   val bm25BatchSql: String = {
@@ -807,22 +818,7 @@ object Search {
 
   val hybridRrfSql: String = {
     val terms = QueryTerms.map(t => s"'$t'").mkString(", ")
-    s"""WITH dl AS (
-       | SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
-       | FROM documents),
-       |dl2 AS (SELECT doc_id, len(toks)::BIGINT AS dl, toks FROM dl),
-       |stats AS (SELECT count(*)::BIGINT AS n, CAST(sum(dl) AS BIGINT) AS t
-       | FROM dl2),
-       |tf AS (
-       | SELECT doc_id, dl, tok, count(*)::BIGINT AS tf
-       | FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM dl2)
-       | WHERE tok IN ($terms) GROUP BY doc_id, dl, tok),
-       |dfreq AS (SELECT tok, count(*)::BIGINT AS df FROM tf GROUP BY tok),
-       |scored AS (
-       | SELECT tf.doc_id,
-       |  CAST(round(CAST((length(bin((2*n + 2) // (2*df + 1))) - 1) * 22 * tf * t AS DOUBLE)
-       |   / CAST(10*tf*t + 3*t + 9*dl*n AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS ppm
-       | FROM tf JOIN dfreq USING (tok), stats),
+    s"""WITH ${bm25ScoredCtes("documents", terms)},
        |lexagg AS (SELECT doc_id, CAST(sum(ppm) AS BIGINT) AS score_ppm
        | FROM scored GROUP BY doc_id),
        |lex AS (SELECT doc_id, lex_rank FROM (
@@ -946,26 +942,7 @@ object Search {
        | UNION ALL
        | SELECT doc_id + $AddedIdOffset AS doc_id, '$AddedText' AS text
        | FROM documents WHERE doc_id % 50 = 3),
-       |dl AS (
-       | SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
-       | FROM docs2),
-       |dl2 AS (SELECT doc_id, len(toks)::BIGINT AS dl, toks FROM dl),
-       |stats AS (SELECT count(*)::BIGINT AS n, CAST(sum(dl) AS BIGINT) AS t
-       | FROM dl2),
-       |tf AS (
-       | SELECT doc_id, dl, tok, count(*)::BIGINT AS tf
-       | FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM dl2)
-       | WHERE tok IN ($terms) GROUP BY doc_id, dl, tok),
-       |dfreq AS (SELECT tok, count(*)::BIGINT AS df FROM tf GROUP BY tok),
-       |scored AS (
-       | SELECT tf.doc_id,
-       |  CAST(round(CAST((length(bin((2*n + 2) // (2*df + 1))) - 1) * 22 * tf * t AS DOUBLE)
-       |   / CAST(10*tf*t + 3*t + 9*dl*n AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS ppm
-       | FROM tf JOIN dfreq USING (tok), stats)
-       |SELECT doc_id, count(*)::BIGINT AS n_terms_matched,
-       | CAST(sum(ppm) AS BIGINT) AS score_ppm
-       |FROM scored GROUP BY doc_id
-       |ORDER BY score_ppm DESC, doc_id LIMIT $TopK""".stripMargin.replace('\n', ' ')
+       |${bm25TopKOver("docs2", terms)}""".stripMargin.replace('\n', ' ')
   }
 
   // ---------------------------------------------------------------------
@@ -1225,26 +1202,7 @@ object Search {
     s"""WITH kept AS (
        | SELECT doc_id, text FROM documents
        | WHERE source IS DISTINCT FROM '$ForgetSource'),
-       |dl AS (
-       | SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
-       | FROM kept),
-       |dl2 AS (SELECT doc_id, len(toks)::BIGINT AS dl, toks FROM dl),
-       |stats AS (SELECT count(*)::BIGINT AS n, CAST(sum(dl) AS BIGINT) AS t
-       | FROM dl2),
-       |tf AS (
-       | SELECT doc_id, dl, tok, count(*)::BIGINT AS tf
-       | FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM dl2)
-       | WHERE tok IN ($terms) GROUP BY doc_id, dl, tok),
-       |dfreq AS (SELECT tok, count(*)::BIGINT AS df FROM tf GROUP BY tok),
-       |scored AS (
-       | SELECT tf.doc_id,
-       |  CAST(round(CAST((length(bin((2*n + 2) // (2*df + 1))) - 1) * 22 * tf * t AS DOUBLE)
-       |   / CAST(10*tf*t + 3*t + 9*dl*n AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS ppm
-       | FROM tf JOIN dfreq USING (tok), stats)
-       |SELECT doc_id, count(*)::BIGINT AS n_terms_matched,
-       | CAST(sum(ppm) AS BIGINT) AS score_ppm
-       |FROM scored GROUP BY doc_id
-       |ORDER BY score_ppm DESC, doc_id LIMIT $TopK""".stripMargin.replace('\n', ' ')
+       |${bm25TopKOver("kept", terms)}""".stripMargin.replace('\n', ' ')
   }
 
   // ---------------------------------------------------------------------

@@ -1642,21 +1642,7 @@ object Similarity {
        |  CASE WHEN vec_id % $IvfDeltaMod = 0 THEN 'delta' ELSE 'existing' END AS y,
        |  count(*)::BIGINT AS o
        | FROM dq WHERE rk = 1 GROUP BY 1, 2),
-       |xs AS (SELECT x, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY x),
-       |ys AS (SELECT y, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY y),
-       |tot AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM cells),
-       |grid AS (
-       | SELECT xs.x, ys.y, xs.r, ys.c, tot.n, COALESCE(cells.o, 0) AS o
-       | FROM xs CROSS JOIN ys CROSS JOIN tot
-       | LEFT JOIN cells ON cells.x = xs.x AND cells.y = ys.y),
-       |u AS (SELECT *, o*n - r*c AS dev FROM grid)
-       |SELECT CAST(max(n) AS BIGINT) AS n,
-       | count(DISTINCT x)::BIGINT AS n_x,
-       | count(DISTINCT y)::BIGINT AS n_y,
-       | CAST((count(DISTINCT x) - 1) * (count(DISTINCT y) - 1) AS BIGINT) AS dof,
-       | CAST(sum(CAST(round(CAST(dev AS DOUBLE) * CAST(dev AS DOUBLE) * 1000000.0
-       |  / (CAST(n AS DOUBLE) * CAST(r AS DOUBLE) * CAST(c AS DOUBLE)), 0) AS BIGINT)) AS BIGINT) AS chi2_ppm
-       |FROM u""".stripMargin.replace('\n', ' ')
+       |${Profile.chiSquareTailSql}""".stripMargin.replace('\n', ' ')
 
   val all: Seq[Q] = Seq(
     Q("n13_ivf_drift", ivfDrift, Some(ivfDriftSql),

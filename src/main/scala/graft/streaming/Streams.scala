@@ -297,12 +297,6 @@ object Streams {
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark(keys)
 
-  /** Streaming gauges (A1/A2-style always-on aggregates, complete mode). */
-  def streamingGauges(events: DataFrame): DataFrame =
-    events.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        approx_count_distinct(col("user_id")).as("approx_users"))
-
   /** Streaming a12 — the Count-Min frequency matrix maintained ONLINE
     * (complete mode): the identical [[graft.expressions.CountMinBuild]]
     * aggregate over the live stream, so the serving layer answers "how

@@ -31,7 +31,7 @@ class CatalogPartitionSpec extends SparkSuite {
     assert(dtDirs.length >= 28, s"expected ~30 day partitions, got ${dtDirs.length}")
     assert(dtDirs.head == "dt=2024-01-01")
 
-    val pruned = Catalog.readPartitioned(spark, path)
+    val pruned = spark.read.parquet(path)
       .filter(col("dt") === "2024-01-15")
     // partition pruning must reach the scan: only one partition's files read
     val scanned = pruned.queryExecution.executedPlan.collect {
@@ -49,7 +49,7 @@ class CatalogPartitionSpec extends SparkSuite {
     assert(dayRows == expectedDayRows && dayRows > 0)
 
     // content round-trips (modulo the added dt column)
-    val total = Catalog.readPartitioned(spark, path).count()
+    val total = spark.read.parquet(path).count()
     assert(total == Catalog.events(spark, sfDir).count())
   }
 }

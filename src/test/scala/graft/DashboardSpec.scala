@@ -142,10 +142,10 @@ class DashboardSpec extends SparkSuite {
     assert(a.nonEmpty && a === b,
       "the section must be served from persisted artifact files")
     // the key-catalog companion serves c19's artifact the same way
-    val k1 = Dashboard.keyCatalog(spark, sfDir).inputFiles.toSet
-    val k2 = Dashboard.keyCatalog(spark, sfDir).inputFiles.toSet
+    val k1 = operators.Profile.keyDiscovery(spark, sfDir).inputFiles.toSet
+    val k2 = operators.Profile.keyDiscovery(spark, sfDir).inputFiles.toSet
     assert(k1.nonEmpty && k1 === k2)
-    assert(Dashboard.keyCatalog(spark, sfDir).collect().nonEmpty)
+    assert(operators.Profile.keyDiscovery(spark, sfDir).collect().nonEmpty)
   }
 
   test("indexResource payload is lazy; correlation probe works on demand") {

@@ -3,7 +3,10 @@
 # Usage: tools/run.sh <mainClass> [args...]   (after `sbt compile` / `sbt package`)
 set -e
 MAIN="$1"; shift
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# this checkout's classes, so a second checkout (say, a parent commit for a
+# plan diff) runs its own build
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
